@@ -1,4 +1,8 @@
 package graft
+import com.fasterxml.jackson.core.StreamWriteFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark surface. Contract: prints ONE JSON line on stdout
@@ -46,10 +50,32 @@ object Bench {
   def force(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.mode("overwrite").format("noop").save()
 
-  /** Locale.ROOT: the f-interpolator is locale-sensitive and a
-    * comma-decimal default locale would emit invalid JSON. */
-  private[graft] def fmt(d: Double): String =
-    String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
+  private val json = JsonMapper.builder()
+    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN).build()
+
+  /** Seconds rounded to 4 decimals as an exact decimal, so the JSON
+    * number is the same under any default locale. */
+  private def dec(d: Double): java.math.BigDecimal =
+    java.math.BigDecimal.valueOf(d).setScale(4, java.math.RoundingMode.HALF_UP)
+
+  /** `SPARK_GRAFT_CPUS`: a positive integer, 4 when unset. A bad value
+    * fails the run instead of reaching the master URL or the JSON. */
+  private[graft] def parseCpus(v: Option[String]): Int = v.fold(4) { s =>
+    s.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
+
+  private def compactNode(mins: Seq[(String, Double)], total: Double,
+      sfDir: String, cpus: Int, contaminated: Boolean,
+      errors: Seq[String]): ObjectNode = {
+    val o = json.createObjectNode()
+    o.put("metric", "total").put("value", dec(total)).put("unit", "sec")
+    val qs = o.putObject("queries")
+    mins.foreach { case (k, v) => qs.put(k, dec(v)) }
+    o.put("sf", sfDir).put("cpus", cpus).put("contaminated", contaminated)
+    errors.foldLeft(o.putArray("errors"))(_.add(_))
+    o
+  }
 
   /** The driver-parseable bench line (r17 verdict item 1): COMPACT —
     * contract fields only (total, per-query seconds, sf, cpus, plus the
@@ -61,19 +87,14 @@ object Bench {
     * `showSuccess := false`, which keeps sbt from printing its
     * `[success] Total time ...` trailer after this). */
   private[graft] def compactLine(mins: Seq[(String, Double)], total: Double,
-      sfDir: String, cpus: String, contaminated: Boolean,
-      errors: Seq[String]): String = {
-    val qs = mins.map { case (k, v) => s"\"$k\":${fmt(v)}" }
-      .mkString("{", ",", "}")
-    val errJson = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${fmt(total)},"unit":"sec",""" +
-      s""""queries":$qs,"sf":"$sfDir","cpus":$cpus,""" +
-      s""""contaminated":$contaminated,"errors":$errJson}"""
-  }
+      sfDir: String, cpus: Int, contaminated: Boolean,
+      errors: Seq[String]): String =
+    json.writeValueAsString(
+      compactNode(mins, total, sfDir, cpus, contaminated, errors))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     // A/B hook for conf experiments (r17): `SPARK_GRAFT_EXTRA_CONF` is
     // `key=value;key=value`. The driver never sets it, so the recorded
     // bench always runs the defaults below.
@@ -88,7 +109,7 @@ object Bench {
     }
     val spark = extraConf.foldLeft(SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")) {
         case (b, (k, v)) => b.config(k, v)
@@ -257,43 +278,51 @@ object Bench {
                      else canarySamples.map(_._2).min
     val contaminatedSpans = flaggedSpans
     val contaminated = contaminatedSpans.nonEmpty
-    val qs = mins.map { case (k, v) => s"\"$k\":${fmt(v)}" }
-      .mkString("{", ",", "}")
-    val repsJson = reps.map { case (k, v) =>
-      s"\"$k\":[${v.map { case (t, ok) => if (ok) fmt(t) else "-1" }.mkString(",")}]"
-    }.mkString("{", ",", "}")
+    def repArr(v: Vector[(Double, Boolean)]) = v.foldLeft(json.createArrayNode()) {
+      case (a, (t, ok)) => if (ok) a.add(dec(t)) else a.add(-1)
+    }
+    def strArr(v: Seq[String]) = v.foldLeft(json.createArrayNode())(_.add(_))
+    val full = compactNode(mins.toSeq, total, sfDir, cpus, contaminated,
+      errors)
+    val flags = json.createObjectNode()
+    flags.put("contaminated", contaminated)
+    flags.set[JsonNode]("contaminated_spans", strArr(contaminatedSpans))
+    flags.set[JsonNode]("healed_spans", strArr(heals.map(_._1).toSeq))
+    flags.set[JsonNode]("errors", strArr(errors))
+    full.setAll[JsonNode](flags)
+    val canaryJson = full.putObject("canary").put("baseline", dec(canaryBase))
+    canarySamples.foldLeft(canaryJson.putArray("samples")) {
+      case (a, (l, t)) => a.add(json.createArrayNode().add(l).add(dec(t)))
+    }
+    val repsJson = full.putObject("reps")
+    reps.foreach { case (k, v) => repsJson.set[JsonNode](k, repArr(v)) }
     // spread = max/min over the 3 fastest successful reps: the stability
     // of the reported min. Slower reps (first-build I/O inside a query, a
     // contention spike already answered by the extra reps) stay visible
     // in the full rep list without branding a stable min as noisy.
-    val spreads = reps.map { case (k, v) =>
+    val spreads = full.putObject("spread")
+    reps.foreach { case (k, v) =>
       val ok = v.collect { case (t, true) => t }
       val best = ok.sorted.take(3)
-      val sp = if (best.isEmpty) 0.0 else best.max / math.max(best.min, 1e-9)
-      s"\"$k\":${fmt(sp)}"
-    }.mkString("{", ",", "}")
-    def strArr(v: Vector[String]) = v.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val canaryJson = s"""{"baseline":${fmt(canaryBase)},"samples":[${
-      canarySamples.map { case (l, t) => s"""["$l",${fmt(t)}]""" }.mkString(",")}]}"""
-    def repArr(v: Vector[(Double, Boolean)]) =
-      v.map { case (t, ok) => if (ok) fmt(t) else "-1" }.mkString("[", ",", "]")
-    val healsJson = heals.map { case (l, o, r, pc, fc) =>
-      s"""{"span":"$l","orig_reps":${repArr(o)},"retry_reps":${repArr(r)},""" +
-        s""""orig_canary":[${pc.map(fmt).mkString(",")}],""" +
-        s""""retry_canary":[${fc.map(fmt).mkString(",")}]}"""
-    }.mkString("[", ",", "]")
-    val flags = s""""contaminated":$contaminated,"contaminated_spans":${
-      strArr(contaminatedSpans)},"healed_spans":${
-      strArr(heals.map(_._1).toVector)},"errors":${strArr(errors)}"""
+      spreads.put(k, dec(
+        if (best.isEmpty) 0.0 else best.max / math.max(best.min, 1e-9)))
+    }
+    val healsJson = full.putArray("heals")
+    heals.foreach { case (l, o, r, pc, fc) =>
+      val h = healsJson.addObject().put("span", l)
+      h.set[JsonNode]("orig_reps", repArr(o))
+      h.set[JsonNode]("retry_reps", repArr(r))
+      pc.foldLeft(h.putArray("orig_canary"))((a, t) => a.add(dec(t)))
+      fc.foldLeft(h.putArray("retry_canary"))((a, t) => a.add(dec(t)))
+    }
     val line = compactLine(mins.toSeq, total, sfDir, cpus, contaminated,
       errors)
-    val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus,$flags,"canary":$canaryJson,"reps":$repsJson,"spread":$spreads,"heals":$healsJson}"""
     val out = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
-    java.nio.file.Files.write(out, full.getBytes("UTF-8"))
+    java.nio.file.Files.write(out, json.writeValueAsBytes(full))
     // full diagnostics (healed/contaminated spans) stay visible in the
     // run log via stderr, keeping stdout's last line the parse target
-    Console.err.println(s"[bench] $flags")
+    Console.err.println(s"[bench] ${json.writeValueAsString(flags)}")
     spark.stop()
     // the contract line, printed after spark.stop() so NOTHING can
     // follow it on stdout (r17 verdict item 1: the driver parses the

@@ -9,10 +9,10 @@ object Verify {
     // the rmTree below still clears the WHOLE dump, so a subset run
     // can never leave a stale full catalog for check.py to pass)
     val (Array(sfDir, outDir), only) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Bench.parseCpus(sys.env.get("SPARK_GRAFT_CPUS"))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       // events.ts is parquet TIMESTAMP(NANOS); session-level so no query
       // constructor has to mutate shared conf (round-8 verdict)

@@ -29,7 +29,7 @@ class QContext(val spark: SparkSession) {
     * the source filename (reference's `name_column`) via
     * `input_file_name()`. */
   def readParquet(path: String, nameColumn: Option[String] = None): DataStream = {
-    val df = spark.read.parquet(path)
+    val df = graft.sources.ParquetRead(spark, path)
     new DataStream(nameColumn.fold(df)(c =>
       df.withColumn(c, org.apache.spark.sql.functions.input_file_name())))
   }
@@ -62,7 +62,7 @@ class QContext(val spark: SparkSession) {
     * min/max scan of just those files. */
   def readSortedParquet(path: String, timeCol: String,
       verify: Boolean = false): OrderedStream = {
-    val df = spark.read.parquet(path)
+    val df = graft.sources.ParquetRead(spark, path)
     if (verify) verifySortedContract(path, timeCol)
     new OrderedStream(df, timeCol)
   }

@@ -82,10 +82,9 @@ object Clusters {
     // rows in `frontier` (-1 = unknown/all): known exactly from the
     // convergence count, so a small residue can be broadcast — the
     // late-round step then probes the PERSISTED edge layout map-side
-    // with no exchange at all. 1M rows ≈ 16 MB broadcast, safely under
-    // driver/executor headroom at any scale.
+    // with no exchange at all, up to [[frontierBroadcastRows]].
     var frontierRows = -1L
-    val broadcastCap = 1000000L
+    val broadcastCap = frontierBroadcastRows(labels.schema)
     var round = 0
     var converged = false
     // round-10: per-round stage timing behind an env flag, so a noisy
@@ -164,6 +163,13 @@ object Clusters {
         s"exceeds ~2^$maxRounds; raise maxRounds")
     labels.select(col("__id").as(idCol), col("__lbl").as("cluster_id"))
   }
+
+  /** Most frontier rows broadcast per CC round: 16 MB of label rows at
+    * Spark's per-type default sizes, safely under driver/executor
+    * headroom at any scale — 1M rows for long ids, fewer for strings. */
+  private[graft] def frontierBroadcastRows(
+      labelSchema: org.apache.spark.sql.types.StructType): Long =
+    16000000L / math.max(1, labelSchema.defaultSize)
 
   /** Quality-based canonical-keeper selection: given cluster-labelled
     * members and a per-member quality column, pick ONE keeper per

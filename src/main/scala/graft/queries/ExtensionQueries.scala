@@ -149,7 +149,7 @@ object ExtensionQueries {
       val tmp = "/tmp/graft_q83_roundtrip"
       new DataStream(lineitem(s, d).filter(col("l_quantity") >= 45))
         .writeParquet(tmp)
-      s.read.parquet(tmp)
+      graft.sources.ParquetRead(s, tmp)
         .groupBy(col("l_returnflag"))
         .agg(sum(col("l_quantity")).as("sum_qty"),
           count(lit(1)).as("n"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.ParquetRead(spark, s"$dir/$name.parquet")
   }
   def lineitem(s: SparkSession, d: String) = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String) = t(s, d, "orders")
@@ -33,8 +33,9 @@ object Tables {
       case _ => raw
     }
   }
-  /** Raw on-disk type of events.ts (footer-only read) — the streaming
-    * gates need it to build a matching user-provided source schema. */
+  /** Raw on-disk type of events.ts — the streaming gates need it to
+    * build a matching user-provided source schema. Reads one footer on
+    * the driver and runs no Spark job ([[graft.sources.ParquetRead]]). */
   def eventsRawTsType(s: SparkSession, d: String): org.apache.spark.sql.types.DataType =
     t(s, d, "events").schema("ts").dataType
   def documents(s: SparkSession, d: String) = t(s, d, "documents")

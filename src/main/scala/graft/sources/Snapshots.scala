@@ -23,10 +23,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * }}}
   *
   * Scale design: a manifest lists data DIRECTORIES, not rows — reading a
-  * snapshot is `spark.read.parquet(dirs: _*)`, so column pruning,
-  * predicate pushdown, and partition-level parallelism are exactly those
-  * of a plain parquet scan; the manifest itself is O(commits) driver-side
-  * metadata. Old data dirs are never rewritten or deleted (append
+  * snapshot is one parquet scan per listed dir ([[ParquetRead]], no
+  * schema-inference job), so column pruning, predicate pushdown, and
+  * partition-level parallelism are exactly those of a plain parquet
+  * scan; the manifest itself is O(commits) driver-side metadata. Old
+  * data dirs are never rewritten or deleted (append
   * re-lists the parent's dirs), which is what makes every historical
   * snapshot readable forever — compaction would be a rewrite committed
   * as a fresh overwrite snapshot.
@@ -102,7 +103,7 @@ object Snapshots {
     // (each data/v<id> is its own partition root); per-dir reads keep
     // partition discovery local and filters/pruning still push into
     // every branch of the union
-    snap.dataDirs.map(p => spark.read.parquet(root.resolve(p).toString))
+    snap.dataDirs.map(p => ParquetRead(spark, root.resolve(p).toString))
       .reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
   }
 

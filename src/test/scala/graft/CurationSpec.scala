@@ -50,6 +50,15 @@ class CurationSpec extends SparkSpecBase {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("CC frontier broadcast is capped by estimated bytes, not rows") {
+    import org.apache.spark.sql.types._
+    def labels(t: DataType) = StructType(Seq(
+      StructField("__id", t), StructField("__lbl", t)))
+    assert(Clusters.frontierBroadcastRows(labels(LongType)) == 1000000L)
+    // string ids estimate 20 bytes each: 40 bytes a label row
+    assert(Clusters.frontierBroadcastRows(labels(StringType)) == 400000L)
+  }
+
   test("nearDupClusters maxBucket bounds a degenerate identical corpus") {
     val s = spark
     import s.implicits._
